@@ -43,7 +43,16 @@ from pyspark.sql import functions as F
 from webcrawl_lowres_lang_spark.session import DEFAULT_CPUS, get_spark
 
 SRC_DEFAULT = "/root/testdata/sf0.1"
+# renumbered doc_id / vec_id must stay below the 10^6 offset the ops'
+# corpus builders add (and so below the tenx builder's 10^7 offset)
+ID_LIMIT = 1_000_000
 _TOKENIZE = "filter(split(regexp_replace(lower(text), '[^a-z0-9 ]', ' '), ' '), x -> x != '')"
+
+
+def max_factor(max_id: int) -> int:
+    """Largest ``--factor`` with ``(max_id + 1) * factor < ID_LIMIT``, so
+    every renumbered id ``id * factor + rep`` stays below the limit."""
+    return (ID_LIMIT - 1) // (max_id + 1)
 
 
 def build(src: str, out: str, factor: int, mode: str) -> None:
@@ -54,10 +63,26 @@ def build(src: str, out: str, factor: int, mode: str) -> None:
     def rd(name):
         return spark.read.parquet(os.path.join(src, f"{name}.parquet"))
 
+    # id headroom, checked before any write
+    max_id = max(
+        rd("documents").agg(F.max("doc_id")).first()[0],
+        rd("embeddings").agg(F.max("vec_id")).first()[0],
+    )
+    if factor > max_factor(max_id):
+        spark.stop()
+        sys.exit(
+            f"--factor {factor} takes renumbered ids to (max id + 1) x factor = "
+            f"{(max_id + 1) * factor:,}, not below {ID_LIMIT:,}; "
+            f"the largest --factor {src} allows is {max_factor(max_id)}"
+        )
+
+    written: list[str] = []
+
     def wr(df, name, parts=DEFAULT_CPUS):
         df.repartition(parts).write.mode("overwrite").parquet(
             os.path.join(out, f"{name}.parquet")
         )
+        written.append(name)
 
     def renum(col):
         return (F.col(col) * factor + F.col("__rep")).alias(col)
@@ -117,10 +142,10 @@ def build(src: str, out: str, factor: int, mode: str) -> None:
         "embeddings",
     )
 
-    for t in sorted(os.listdir(out)):
-        df = spark.read.parquet(os.path.join(out, t))
-        key = {"documents.parquet": "doc_id", "embeddings.parquet": "vec_id"}.get(t)
-        msg = f"{t} rows={df.count()}"
+    for t in written:
+        df = spark.read.parquet(os.path.join(out, f"{t}.parquet"))
+        key = {"documents": "doc_id", "embeddings": "vec_id"}.get(t)
+        msg = f"{t}.parquet rows={df.count()}"
         if key:
             msg += f" distinct_{key}={df.select(key).distinct().count()}"
         print(msg, flush=True)

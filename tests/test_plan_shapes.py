@@ -165,3 +165,34 @@ def test_bucketed_join_needs_no_shuffle(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_cand_b")
         spark.sql("USE default")
         spark.sql("DROP DATABASE IF EXISTS bdemo")
+
+
+def _leaf_classes(df) -> list[str]:
+    """Leaf node classes of ``df``'s plan with cache substitution applied,
+    read from the tree itself: a plan string can run to 10^8 characters
+    when cached frames nest."""
+    leaves = df._jdf.queryExecution().withCachedData().collectLeaves()
+    return [leaves.apply(i).getClass().getSimpleName() for i in range(leaves.size())]
+
+
+def test_crawl_round_plans_read_checkpoints_not_caches(spark, tmp_path):
+    """A round's outputs plan over LogicalRDD checkpoint leaves: no
+    InMemoryRelation, whose cached plan Spark would re-walk on every AQE
+    update of every later action."""
+    from webcrawl_lowres_lang_spark.lineage import release
+    from webcrawl_lowres_lang_spark.streaming.crawler import CrawlConfig, CrawlEngine
+
+    cfg = CrawlConfig(n_urls=600, n_pages=60, n_hosts=20, host_budget=4,
+                      validate_pixels=False)
+    eng = CrawlEngine(spark, cfg, str(tmp_path / "ck"))
+    eng.seen.enable_empty_bloom()
+    ledger, frontier = eng.run_round(eng.seed_frontier())
+    try:
+        assert _leaf_classes(ledger) == ["LogicalRDD"]
+        leaves = _leaf_classes(frontier)
+        assert "InMemoryRelation" not in leaves, leaves
+        assert "LogicalRDD" in leaves, leaves
+    finally:
+        release(eng._round_frames)
+        for fixture in (eng.links, eng.pages, eng.robots, eng.outlinks):
+            fixture.unpersist()

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..determinism import quantize9, salt
+from ..lineage import cut
 
 DEFAULT_HOST_BUDGET = 5
 DEPTH_WEIGHT = 0.1  # priority = relevance - DEPTH_WEIGHT * depth
@@ -158,13 +159,13 @@ def admit_per_domain(
     f = f.withColumn("__lrank", F.row_number().over(w1))
     if caches is not None:
         # admitted and deferred are consumed by DIFFERENT downstream
-        # actions (fetch chain vs next-frontier write); without a cache the
-        # second consumer re-executes the full-frontier phase-1 window.
-        # Cache the post-phase-1 frame — both outputs are filters (plus the
-        # bounded phase-2 window) over it. Caller unpersists after its
-        # round materializes (same contract as with_global_sequence).
-        f = f.cache()
-        caches.append(f)
+        # actions (fetch chain vs next-frontier write); without a barrier
+        # the second consumer re-executes the full-frontier phase-1 window.
+        # Cut the post-phase-1 frame into a local checkpoint — both outputs
+        # are filters (plus the bounded phase-2 window) over it. Caller
+        # releases it (lineage.release) after its round materializes (same
+        # contract as with_global_sequence).
+        f = cut(f, caches)
     survivors = f.filter(F.col("__lrank") <= F.lit(base_budget))
     losers = f.filter(F.col("__lrank") > F.lit(base_budget))
     # phase 2: global per-domain rank over the bounded survivor set

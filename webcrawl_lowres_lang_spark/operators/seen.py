@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
+from ..lineage import cut, release
 from ..sources.tablestore import append_table, read_table, rewrite_table, table_exists
 from .bloom import BloomConfig, PartitionedBloom, build_bloom_from_df
 from .cuckoo import CuckooConfig, PartitionedCuckoo, build_cuckoo_from_df
@@ -184,16 +185,16 @@ class SeenSet:
                 self.load().select("bucket", "url_hash"), ["bucket", "url_hash"], "left_anti"
             )
         # the append write doubles as the count job (Observation rides the
-        # write action) — one job instead of count-then-write
-        obs = Observation()
-        out = (
-            new.select("url_hash", "bucket")
-            .repartition(self.n_buckets, "bucket")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .cache()
-        )
+        # write action) — one job instead of count-then-write. The batch is
+        # a local checkpoint (the delta build reads it again) and the
+        # Observation sits ABOVE the cut, in the write's own plan: an
+        # observed frame inside a lazy checkpoint may never fire.
         self._phase("seen:append")
-        append_table(out, self.path, partition_by=("bucket",))
+        obs = Observation()
+        out = cut(new.select("url_hash", "bucket").repartition(self.n_buckets, "bucket"))
+        append_table(
+            out.observe(obs, F.count(F.lit(1)).alias("n")), self.path, partition_by=("bucket",)
+        )
         self._phase("seen:obs")
         try:
             n = int(obs.get["n"])
@@ -202,7 +203,7 @@ class SeenSet:
             # whole subtree above the bucket shuffle — including the
             # CollectMetrics node — when the batch turns out empty at
             # runtime, leaving the Observation unfired. The count on the
-            # (already materialized) cache is the cheap, always-correct
+            # (already materialized) checkpoint is the cheap, always-correct
             # fallback.
             n = out.count()
         if self._bloom is not None and n:
@@ -213,7 +214,7 @@ class SeenSet:
             self._bloom.merge(delta)
             self._rebroadcast()
         self._phase("seen:done")
-        out.unpersist()
+        release([out])
         return n
 
     def expire(self, keys: DataFrame, distributed_threshold: int = 100_000) -> int:

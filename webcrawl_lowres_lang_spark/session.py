@@ -75,11 +75,11 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # Bound plan EXPLAIN strings (debug-only artifacts): AQE rebuilds
-        # the plan string on every stage update, and nested cached plans
-        # (InMemoryRelation prints its full child tree, recursively) make
-        # that string grow combinatorially — measured a 1 GiB-heap OOM
-        # inside StringConcat on the crawl's cache spine, and real driver
-        # CPU per AQE update. 256 KiB is ~3x the largest real explain in
+        # the plan string on every stage update, and a plan that reads
+        # cached frames prints each cached frame's whole plan inside its
+        # own, so a chain of caches renders a string that grows with the
+        # chain. The cap keeps one such plan from holding the driver's
+        # heap and CPU. 256 KiB is ~3x the largest real explain in
         # plans/r06; semantics are untouched (truncation only affects the
         # rendered string).
         .config("spark.sql.maxPlanStringLength", str(256 * 1024))

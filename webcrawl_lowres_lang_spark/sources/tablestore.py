@@ -42,10 +42,10 @@ def table_exists(path: str) -> bool:
     return False
 
 
-def read_table(spark: SparkSession, path: str) -> DataFrame:
-    """Read a table (the path may carry a glob over snapshot subdirs —
-    the Iceberg equivalent reads the single partitioned table instead)."""
-    return spark.read.parquet(path)
+def read_table(spark: SparkSession, *paths: str) -> DataFrame:
+    """Read a table, or the union of several snapshot subdirs of one (the
+    Iceberg equivalent reads the single partitioned table instead)."""
+    return spark.read.parquet(*paths)
 
 
 def append_table(df: DataFrame, path: str, partition_by: tuple[str, ...] = ()) -> None:

@@ -21,12 +21,22 @@ State tables mirror FIXTURES.md §5: frontier / url_seen / ledger.
 Everything is a pure function of (seed, fixture sizes, budget), so two
 runs — or two cluster sizes — produce identical ledgers (parity-tested
 against the sequential oracle in tests/reference_oracle.py).
+
+Frames a round reads more than once are cut into local checkpoints
+(``lineage.cut``), not cached, so each action plans over small
+``LogicalRDD`` leaves instead of the round's whole DAG. The trade is fault
+tolerance: a local checkpoint has no lineage, so losing an executor
+mid-round fails the round's job instead of recomputing the lost blocks.
+The round snapshot is the recovery unit — ``CrawlEngine.resume`` restarts
+from the last completed round. Only the fixture tables, built in set-up
+and read by every round, stay cached.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 from dataclasses import asdict, dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
@@ -34,6 +44,7 @@ from pyspark.sql import functions as F
 
 from ..determinism import quantize9
 from ..functions.urls import with_url_keys
+from ..lineage import cut, release
 from ..operators.bloom import BloomConfig
 from ..operators.fetch import fetch_and_validate, sniff_reject
 from ..operators.neardup import suppress_near_dups
@@ -143,7 +154,8 @@ class CrawlEngine:
         # lrl-crawler.py:280-291, generalized per-domain instead of
         # whole-crawl). Rows of blocked domains stay queued, never admitted.
         self.blocked_domains: set[str] = set()
-        self._pending_caches: list[DataFrame] = []
+        # seed_frontier's cut frames, released with round 0's
+        self._pending_frames: list[DataFrame] = []
 
     def _label(self, phase: str) -> None:
         """Job label for the UI/REST (guide: label your jobs); phase
@@ -191,8 +203,8 @@ class CrawlEngine:
                 for uid in fx.search_result_ids(c.seed, qid, page, c.n_urls):
                     rows.append((uid, 0, 0.0))
         disc = self.spark.createDataFrame(rows, DISCOVERY_SCHEMA)
-        resolved = self._resolve_discoveries(disc).cache()
-        self._pending_caches.append(resolved)  # unpersisted after round 0
+        # cut: filter_unseen's bloom split reads ``resolved`` twice
+        resolved = cut(self._resolve_discoveries(disc), self._pending_frames)
         fresh = self.seen.filter_unseen(resolved)
         self._seen_total += self.seen.add(fresh.select("url_hash"), assume_new=True)
         return fresh
@@ -227,11 +239,12 @@ class CrawlEngine:
         semantics; ``run()`` always interleaves them."""
         c = self.cfg
         self._label(f"r{self.round}:admission")
-        p = with_priority(frontier)
-        p = robots_filter(p, self.robots)
-        # cache: admitted/deferred/held all branch from p, and each write/
+        # every frame cut below is released by run() after the checkpoint
+        frames = self._pending_frames
+        self._pending_frames = []
+        # cut: admitted/deferred/held all branch from p, and each write/
         # action would otherwise re-execute the canonicalize+window chain
-        p = p.cache()
+        p = cut(robots_filter(with_priority(frontier), self.robots), frames)
         if self.blocked_domains:
             # broadcast-join, not a literal array: plan size stays constant
             # as the blocked set grows over a long crawl
@@ -245,25 +258,27 @@ class CrawlEngine:
         else:
             held = None
             p_active = p
-        adm_caches: list[DataFrame] = []
         admitted, deferred = admit_per_domain(
-            p_active, self.robots, c.host_budget, caches=adm_caches
+            p_active, self.robots, c.host_budget, caches=frames
         )
 
         self._label(f"r{self.round}:fetch+score")
         scored = fetch_and_validate(admitted, self.links, self.pages, c.seed, c.validate_pixels)
-        scored = scored.withColumn(
-            "caption_score",
-            F.when(F.col("caption").isNotNull(), quantize9(self.score_udf(F.col("caption"))))
-            .otherwise(F.lit(0.0)),
-        ).cache()  # sequence + offset-counts branch from here; avoid double decode
+        # cut: sequence + offset-counts branch from here; avoid double decode
+        scored = cut(
+            scored.withColumn(
+                "caption_score",
+                F.when(F.col("caption").isNotNull(), quantize9(self.score_udf(F.col("caption"))))
+                .otherwise(F.lit(0.0)),
+            ),
+            frames,
+        )
         # canonical fetch order WITHOUT a single-partition window: range
         # partition on the sort key, per-partition row_number + offsets
         self._label(f"r{self.round}:sequence")
-        seq_caches: list[DataFrame] = []
         ledger = with_global_sequence(
             scored, [F.desc("priority"), F.asc("url_hash")], "fetch_seq",
-            caches=seq_caches,
+            caches=frames,
         )
         # order_key headroom: 10^12 fetches per round before collision
         # (fetch_seq is long; int32 or a 10^6 stride would cap a large
@@ -283,21 +298,22 @@ class CrawlEngine:
             ),
         )
         self._label(f"r{self.round}:neardup")
-        ledger = self._with_near_dup_flags(ledger, seq_caches).cache()
+        # cut: discovery, the snapshot write and the reps append read it
+        ledger = cut(self._with_near_dup_flags(ledger, frames), frames)
 
         self._label(f"r{self.round}:discover")
         disc = self._discover_outlinks(ledger)
-        # cache: filter_unseen's bloom split consumes ``resolved`` in TWO
+        # cut: filter_unseen's bloom split consumes ``resolved`` in TWO
         # union branches (definitely-unseen + verified), each of which
         # would re-execute the resolve chain (link join + canonicalize +
         # dedup window) without the barrier
-        resolved = self._resolve_discoveries(disc).cache()
-        fresh = self.seen.filter_unseen(resolved).cache()
+        resolved = cut(self._resolve_discoveries(disc), frames)
+        fresh = cut(self.seen.filter_unseen(resolved), frames)
         # synchronous ON PURPOSE: this action materializes the round's
-        # cache spine (ledger -> discoveries -> fresh); deferring it into
-        # the checkpoint pool made all four actions race to build the same
-        # un-materialized caches (measured 44 vs 56 URLs/s) — the writes
-        # parallelize well only once they read warm caches
+        # checkpoint spine (ledger -> discoveries -> fresh); deferring it
+        # into the checkpoint pool made all four actions race to build the
+        # same un-materialized frames (measured 44 vs 56 URLs/s) — the
+        # writes parallelize well only once they read stored blocks
         self._label(f"r{self.round}:seen-add")
         self._seen_total += self.seen.add(fresh.select("url_hash"), assume_new=True)
 
@@ -308,9 +324,7 @@ class CrawlEngine:
         next_frontier = deferred.select(*fresh.columns).unionByName(fresh)
         if held is not None:
             next_frontier = next_frontier.unionByName(held.select(*fresh.columns))
-        self._round_caches = [p, scored, resolved, fresh, *adm_caches, *seq_caches,
-                              *self._pending_caches]  # unpersisted after checkpoint
-        self._pending_caches = []
+        self._round_frames = frames
         return ledger, next_frontier
 
     def _reps_path(self) -> str:
@@ -319,7 +333,7 @@ class CrawlEngine:
     def _reps_exists(self) -> bool:
         return table_exists(self._reps_path())
 
-    def _with_near_dup_flags(self, ledger: DataFrame, caches: list[DataFrame]) -> DataFrame:
+    def _with_near_dup_flags(self, ledger: DataFrame, frames: list[DataFrame]) -> DataFrame:
         """phash near-dup suppression wired into the round (north rule):
         ``dup_of`` = order_key of the earliest near-duplicate across ALL
         rounds so far. The prior-rounds side is the MAINTAINED
@@ -334,7 +348,7 @@ class CrawlEngine:
         itself uses for its exact-dup collapse.
 
         The suppression plan branches from its input ~5 times (reps window,
-        two band sides, verdict map-back), so it runs over a SLIM CACHED
+        two band sides, verdict map-back), so it runs over a SLIM CUT
         (order_key, phash) frame and the verdict joins back to the wide
         ledger by order_key — never dragging ledger columns through the
         band shuffles."""
@@ -343,8 +357,7 @@ class CrawlEngine:
             slim = slim.unionByName(
                 read_table(self.spark, self._reps_path()).select("order_key", "phash")
             )
-        slim = slim.cache()
-        caches.append(slim)
+        slim = cut(slim, frames)
         flagged = suppress_near_dups(
             slim, "phash", "order_key", self.cfg.near_dup_max_hamming
         ).select("order_key", "dup_of")
@@ -377,13 +390,6 @@ class CrawlEngine:
         except (TypeError, ValueError):
             pass
         conf.set("spark.sql.shuffle.partitions", str(target))
-        # Bound AQE's per-update plan strings for the crawl's nested cache
-        # spine (see session.py) — also applied here because the engine
-        # may run inside a FOREIGN session (the driver's correctness
-        # harness builds its own) whose default is unbounded: measured a
-        # 1 GiB-heap OOM inside plan-string rendering without it.
-        prev_plan_len = conf.get("spark.sql.maxPlanStringLength", None)
-        conf.set("spark.sql.maxPlanStringLength", str(256 * 1024))
         try:
             if frontier is None:
                 self.seen.enable_empty_bloom()
@@ -400,15 +406,11 @@ class CrawlEngine:
                 frontier = read_table(
                     self.spark, os.path.join(self.dir, f"frontier/r{self.round}")
                 )
-                self._label(f"r{self.round}:unpersist")
-                ledger.unpersist()
-                for df in getattr(self, "_round_caches", []):
-                    df.unpersist()
+                self._label(f"r{self.round}:release")
+                release(self._round_frames)
                 self.round += 1
         finally:
             conf.set("spark.sql.shuffle.partitions", prev_parts)
-            if prev_plan_len is not None:
-                conf.set("spark.sql.maxPlanStringLength", prev_plan_len)
 
     def _checkpoint(self, ledger: DataFrame, frontier: DataFrame) -> None:
         r = self.round
@@ -427,7 +429,7 @@ class CrawlEngine:
         # maintain the phash-representative side table: one (order_key,
         # phash) row per phash value first seen this round (order_keys are
         # monotone in round, so appends never supersede an existing rep).
-        # Derived from the CACHED in-memory ledger — re-reading the
+        # Derived from the checkpointed in-memory ledger — re-reading the
         # just-written parquet cost a second full-ledger scan per round
         # (the r3 formulation); the prior-reps anti-join side stays a lazy
         # slim parquet scan inside this one append job.
@@ -442,9 +444,9 @@ class CrawlEngine:
 
         # The three snapshot writes are INDEPENDENT — disjoint target
         # paths, all reading frames the round already materialized into
-        # caches (ledger / fresh / admission) — so they overlap in a small
-        # thread pool (guide §2.6: actions are only sequential because the
-        # driver calls them sequentially; FIFO scheduling back-fills one
+        # checkpoints (ledger / fresh / admission) — so they overlap in a
+        # small thread pool (guide §2.6: actions are only sequential because
+        # the driver calls them sequentially; FIFO scheduling back-fills one
         # write's task tail with the next write's tasks). State mutations
         # (Observation read, blocked_domains fold) happen strictly after
         # the joins below, so round semantics and the parity ordering
@@ -548,7 +550,14 @@ class CrawlEngine:
         return read_table(self.spark, os.path.join(self.dir, f"frontier/r{self.round - 1}"))
 
     def ledger_df(self) -> DataFrame:
-        return read_table(self.spark, os.path.join(self.dir, "ledger/r*"))
+        """Every round's ledger snapshot. Reads the ``ledger/r<N>`` dirs by
+        name: a glob path makes Spark's sink-metadata probe log a
+        FileNotFoundException trace on every read."""
+        root = os.path.join(self.dir, "ledger")
+        rounds = sorted(
+            int(m.group(1)) for n in os.listdir(root) if (m := re.fullmatch(r"r(\d+)", n))
+        )
+        return read_table(self.spark, *(os.path.join(root, f"r{r}") for r in rounds))
 
 
 def _parquet_file_rows(path: str) -> list[tuple[int, int]]:
